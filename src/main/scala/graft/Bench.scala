@@ -194,7 +194,7 @@ object Bench {
     * compilation isn't charged to the alphabetically first measured
     * query — the bench measures query cost, not JVM startup.
     */
-  private[graft] def warmup(spark: SparkSession, sfDir: String): Unit = {
+  private def warmup(spark: SparkSession, sfDir: String): Unit = {
     def noop(df: org.apache.spark.sql.DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()
     val li = Tables.t(spark, sfDir, "lineitem").limit(20000).cache()
@@ -251,8 +251,8 @@ object Bench {
         ".state.RocksDBStateStoreProvider")
       val src = org.apache.spark.sql.execution.streaming.runtime
         .MemoryStream[(java.sql.Timestamp, Long)]
-      val out = java.nio.file.Files
-        .createTempDirectory("graft-warm-stream").toString
+      val out = FixtureMemo.cleanupOnExit(java.nio.file.Files
+        .createTempDirectory("graft-warm-stream").toString)
       val q =
         try src.toDF().toDF("ts", "v")
           .withWatermark("ts", "5 seconds")
@@ -267,13 +267,13 @@ object Bench {
           case Some(v) => spark.conf.set(pKey, v)
           case None => spark.conf.unset(pKey)
         }
-      (0 to 1).foreach { i =>
+      try (0 to 1).foreach { i =>
         src.addData((0 until 100).map(j =>
           (java.sql.Timestamp.from(java.time.Instant
             .ofEpochSecond(1704067200L + i * 120L + j)), j.toLong)))
         q.processAllAvailable()
       }
-      q.stop()
+      finally q.stop()
     } catch { case e: Throwable =>
       System.err.println(s"[bench] stream warm failed: ${e.getMessage}")
     }

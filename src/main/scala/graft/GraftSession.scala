@@ -2,20 +2,11 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Session factory with the engine's scale posture baked in. Local runs
-  * parameterize cores via SPARK_GRAFT_CPUS; on a real cluster the same
-  * confs apply (master/memory come from spark-submit).
+/** Session factory with the engine's scale posture baked in. Callers
+  * set the master (Bench and Verify: local[SPARK_GRAFT_CPUS]); on a real
+  * cluster the same confs apply (master/memory come from spark-submit).
   */
 object GraftSession {
-
-  def local(cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")): SparkSession = {
-    val s = builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
 
   /** Cluster-agnostic tuning:
     * - AQE on (default in Spark 4) with skew-join splitting: runtime

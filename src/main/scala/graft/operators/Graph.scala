@@ -144,8 +144,8 @@ object Graph {
       .limit(20)
 
   /** (basket, item) rows → undirected co-occurrence edge list (u < v,
-    * distinct) — shared by the gate query and ScaleProbe so the probed
-    * shape can't drift from the shipped one.
+    * distinct) — a public building block, so a caller scaling the
+    * co-purchase graph builds exactly the shape the gate query ships.
     */
   def basketEdges(items0: DataFrame): DataFrame = {
     val items = items0.distinct()

@@ -108,15 +108,6 @@ object TransactionAvro {
     new GenericDatumReader[GenericRecord](writer, reader)
       .read(null, DecoderFactory.get().binaryDecoder(bytes, null))
 
-  /** Decode a framed payload written with an older/newer Transaction
-    * schema, resolving to the current reader schema.
-    */
-  def decodeTransactionEvolved(bytes: Array[Byte], writer: Schema): Transaction = {
-    val (_, body) = unframe(bytes)
-    val r = fromBytesResolving(body, writer, transactionSchema)
-    recordToTransaction(r)
-  }
-
   // ---- Transaction ----
 
   def encodeTransaction(t: Transaction,

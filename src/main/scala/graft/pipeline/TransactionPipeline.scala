@@ -154,7 +154,8 @@ object TransactionPipeline {
   def toKafka(df: DataFrame, bootstrap: String, topic: String,
       checkpoint: String,
       schemaId: Int = TransactionAvro.ApprovedSchemaId,
-      extraOptions: Map[String, String] = Map.empty): StreamingQuery =
+      extraOptions: Map[String, String] = Map.empty): StreamingQuery = {
+    TransactionAvro.registerUdfs(df.sparkSession)
     df.select(col("id").cast("string").as("key"),
         call_udf("encode_approved", struct(df.columns.map(col).toIndexedSeq: _*),
           lit(schemaId)).as("value"))
@@ -165,6 +166,7 @@ object TransactionPipeline {
       .option("checkpointLocation", checkpoint)
       .options(extraOptions)
       .start()
+  }
 
   /** The canonical 5-transaction replay fixture (FIXTURES.md §A.3, from
     * the reference's BaseTransactionTest.java:145-156), with epoch-based

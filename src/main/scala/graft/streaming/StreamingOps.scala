@@ -2306,11 +2306,6 @@ object StreamingOps {
     }
   }
 
-  /** The one shared OUTER changelog-join replay per (process, dir):
-    * the left gate's thinned fixture through
-    * [[ChangelogOuterJoinMultiProcessor]], memoized as a parquet PATH;
-    * the left/full gates slice their tag.
-    */
   /** The inner changelog-join replay, memoized as a parquet PATH —
     * dedicated, DELIBERATELY not folded into the outer-join multi
     * replay: the inner machine emits ~an order of magnitude more delta
@@ -2332,6 +2327,11 @@ object StreamingOps {
     s.read.parquet(changelogOuterPath(s, dir))
   }
 
+  /** The one shared OUTER changelog-join replay per (process, dir):
+    * the left gate's thinned fixture through
+    * [[ChangelogOuterJoinMultiProcessor]], memoized as a parquet PATH;
+    * the left/full gates slice their tag.
+    */
   private def changelogOuterPath(s: SparkSession, dir: String): String =
     memoFixture("changelog_outer_join_replay_path", dir) {
       import s.implicits._

@@ -87,6 +87,23 @@ class PipelineSpec extends SparkSpecBase {
     assert(results.forall(_.processingTimestamp != null))
   }
 
+  test("toKafka registers its own encoder on a session that never decoded") {
+    // a fresh session has no UDFs: only toKafka itself can register
+    // encode_approved, so the one failure left is the absent kafka sink
+    val fresh = spark.newSession()
+    import fresh.implicits._
+    implicit val sql = fresh.sqlContext
+    val src = MemoryStream[Transaction]
+    val ckpt = java.nio.file.Files.createTempDirectory("graft-tokafka").toString
+    val e = intercept[Exception] {
+      TransactionPipeline.toKafka(TransactionPipeline.transform(src.toDF()),
+        "localhost:9092", "approved_transactions", ckpt)
+    }
+    val msg = String.valueOf(e.getMessage)
+    assert(!msg.contains("encode_approved"), msg)
+    assert(msg.contains("Failed to find data source: kafka"), msg)
+  }
+
   test("Confluent-framed Avro round-trips every fixture row") {
     fixture.foreach { t =>
       val bytes = TransactionAvro.encodeTransaction(t)
@@ -158,17 +175,16 @@ class PipelineSpec extends SparkSpecBase {
     new GenericDatumWriter[org.apache.avro.generic.GenericRecord](writerV0)
       .write(rec, enc)
     enc.flush()
-    val framed = TransactionAvro.frame(1, out.toByteArray)
-    val t = TransactionAvro.decodeTransactionEvolved(framed, writerV0)
-    assert(t.id == "t1" && t.amount == 5.0 && t.currency == "EUR")
-    assert(t.description.isEmpty && t.category.isEmpty && t.metadata.isEmpty)
-    // the same evolution through the resolver path: register v0 under a
-    // fresh id and decode the frame without naming the writer explicitly
+    // register v0 under a fresh id: the frame's id resolves the old
+    // writer, and the current schema reads it
     val resolver = TransactionAvro.MapSchemaResolver(
       Map(3 -> writerV0, 1 -> TransactionAvro.transactionSchema))
-    val t2 = TransactionAvro.decodeTransaction(
+    val t = TransactionAvro.decodeTransaction(
       TransactionAvro.frame(3, out.toByteArray), resolver)
-    assert(t2 == t)
+    assert(t.id == "t1" && t.amount == 5.0 && t.currency == "EUR")
+    assert(t.timestamp.getTime == 1700000000000L && t.merchant == "m" &&
+      t.status == "APPROVED" && t.userId == "u")
+    assert(t.description.isEmpty && t.category.isEmpty && t.metadata.isEmpty)
   }
 
   test("schema evolution: a NEWER writer with an added nullable field resolves down") {
