@@ -6,7 +6,6 @@ import java.nio.ByteBuffer
 import org.apache.avro.Schema
 import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWriter, GenericRecord}
 import org.apache.avro.io.{DecoderFactory, EncoderFactory}
-import org.apache.spark.sql.{Row, SparkSession}
 
 import graft.pipeline.TransactionPipeline.{ApprovedTransaction, Transaction}
 
@@ -30,9 +29,11 @@ import graft.pipeline.TransactionPipeline.{ApprovedTransaction, Transaction}
   * Avro evolution rules, unknown id → loud failure (never a silent
   * mis-decode).
   *
-  * Thread-safety: readers/writers are stateless; per-call encoders are
-  * cheap (BinaryEncoder without reuse) — adequate for the record sizes
-  * involved; pass reuse buffers if this ever shows in a profile.
+  * The functions here build a fresh reader or writer per call and are
+  * thread-safe. They are the scalar reference: the Spark path is
+  * [[DecodeTransaction]] / [[EncodeApproved]], which keep one reader per
+  * schema id, one writer and their buffers per partition, and are tested
+  * byte for byte against these.
   */
 object TransactionAvro {
 
@@ -56,7 +57,7 @@ object TransactionAvro {
     * ids; decode against a frame from any other id fails loudly instead
     * of mis-decoding bytes against the wrong schema.
     */
-  trait SchemaResolver { def writerSchema(id: Int): Schema }
+  trait SchemaResolver extends Serializable { def writerSchema(id: Int): Schema }
 
   final case class MapSchemaResolver(byId: Map[Int, Schema])
       extends SchemaResolver {
@@ -77,15 +78,17 @@ object TransactionAvro {
     buf.array()
   }
 
-  /** Strip the Confluent header; returns (schemaId, body). */
-  def unframe(bytes: Array[Byte]): (Int, Array[Byte]) = {
+  /** Check the Confluent header; returns the frame's schema id. */
+  def schemaIdOf(bytes: Array[Byte]): Int = {
+    require(bytes != null, "null frame (a Kafka tombstone carries no value)")
     require(bytes.length >= 5 && bytes(0) == MagicByte,
       s"not Confluent-framed (len=${bytes.length})")
-    val buf = ByteBuffer.wrap(bytes)
-    buf.get()
-    val id = buf.getInt
-    (id, java.util.Arrays.copyOfRange(bytes, 5, bytes.length))
+    ByteBuffer.wrap(bytes, 1, 4).getInt
   }
+
+  /** Strip the Confluent header; returns (schemaId, body). */
+  def unframe(bytes: Array[Byte]): (Int, Array[Byte]) =
+    (schemaIdOf(bytes), java.util.Arrays.copyOfRange(bytes, 5, bytes.length))
 
   // ---- generic record (de)serialization ----
 
@@ -142,22 +145,6 @@ object TransactionAvro {
       fromBytesResolving(body, resolver.writerSchema(id), transactionSchema))
   }
 
-  /** Permissive decode result: exactly one of `t` / `error` is set. */
-  final case class SafeDecoded(t: Transaction, error: String)
-
-  /** Quarantine-tier decode (the q23b pattern at the ingest edge): a
-    * malformed or unknown-id frame yields an error string instead of
-    * killing the batch — at 100 TB a single poison frame must become a
-    * dead-letter row, not a job failure. The strict [[decodeTransaction]]
-    * stays the O2-parity path; this is the production edge.
-    */
-  def decodeTransactionSafe(bytes: Array[Byte],
-      resolver: SchemaResolver = DefaultResolver): SafeDecoded =
-    try SafeDecoded(decodeTransaction(bytes, resolver), null)
-    catch { case scala.util.control.NonFatal(e) =>
-      SafeDecoded(null, s"${e.getClass.getSimpleName}: ${e.getMessage}")
-    }
-
   private def recordToTransaction(r: GenericRecord): Transaction = {
     def str(f: String): String = Option(r.get(f)).map(_.toString).orNull
     Transaction(
@@ -207,28 +194,5 @@ object TransactionAvro {
       amountInUsd = r.get("amountInUsd").asInstanceOf[Double],
       processingTimestamp =
         new java.sql.Timestamp(r.get("processingTimestamp").asInstanceOf[Long]))
-  }
-
-  /** SQL-surface access: decode_transaction(binary) → Transaction struct,
-    * encode_approved(struct, id) → framed binary. UDF (not a custom
-    * Expression) is the right tool here — the Avro codec is black-box
-    * library code, nothing to codegen.
-    */
-  def registerUdfs(spark: SparkSession): Unit = {
-    spark.udf.register("decode_transaction",
-      (bytes: Array[Byte]) => decodeTransaction(bytes))
-    spark.udf.register("decode_transaction_safe",
-      (bytes: Array[Byte]) => decodeTransactionSafe(bytes))
-    spark.udf.register("encode_approved", (row: Row, schemaId: Int) =>
-      encodeApproved(ApprovedTransaction(
-        id = row.getAs[String]("id"),
-        amount = row.getAs[Double]("amount"),
-        currency = row.getAs[String]("currency"),
-        timestamp = row.getAs[java.sql.Timestamp]("timestamp"),
-        merchant = row.getAs[String]("merchant"),
-        userId = row.getAs[String]("userId"),
-        amountInUsd = row.getAs[Double]("amountInUsd"),
-        processingTimestamp = row.getAs[java.sql.Timestamp]("processingTimestamp")),
-        schemaId))
   }
 }

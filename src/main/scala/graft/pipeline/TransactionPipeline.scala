@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlShim, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -77,11 +77,16 @@ object TransactionPipeline {
     * The broker-less test tier drives this directly on framed fixture
     * bytes, which is exactly what both `.load()` paths feed it.
     */
-  def decodeValues(kafkaDf: DataFrame): DataFrame = {
-    TransactionAvro.registerUdfs(kafkaDf.sparkSession)
-    kafkaDf
-      .select(call_udf("decode_transaction", col("value")).as("t"))
+  def decodeValues(kafkaDf: DataFrame): DataFrame =
+    kafkaDf.select(decode(kafkaDf, permissive = false).as("t"))
       .select(col("t.*"))
+
+  /** The `value` decode; also registers the codec's SQL names, which
+    * callers that decode and then `encode_approved` by name rely on.
+    */
+  private def decode(kafkaDf: DataFrame, permissive: Boolean): Column = {
+    AvroExpressions.register(kafkaDf.sparkSession)
+    GraftSqlShim.column(DecodeTransaction(GraftSqlShim.expression(col("value")), permissive))
   }
 
   /** Quarantine twin of [[decodeValues]] (the q23b pattern at the ingest
@@ -90,14 +95,11 @@ object TransactionPipeline {
     * carry their error and raw bytes as a dead-letter row instead of
     * failing the batch. Split with [[goodRows]] / [[deadLetters]].
     */
-  def decodeValuesPermissive(kafkaDf: DataFrame): DataFrame = {
-    TransactionAvro.registerUdfs(kafkaDf.sparkSession)
+  def decodeValuesPermissive(kafkaDf: DataFrame): DataFrame =
     kafkaDf
-      .select(col("value"),
-        call_udf("decode_transaction_safe", col("value")).as("r"))
+      .select(col("value"), decode(kafkaDf, permissive = true).as("r"))
       .select(col("r.t").as("t"), col("value").as("frame"),
         col("r.error").as("decode_error"))
-  }
 
   /** Successfully decoded rows of a [[decodeValuesPermissive]] frame. */
   def goodRows(permissive: DataFrame): DataFrame =
@@ -155,7 +157,7 @@ object TransactionPipeline {
       checkpoint: String,
       schemaId: Int = TransactionAvro.ApprovedSchemaId,
       extraOptions: Map[String, String] = Map.empty): StreamingQuery = {
-    TransactionAvro.registerUdfs(df.sparkSession)
+    AvroExpressions.register(df.sparkSession)
     df.select(col("id").cast("string").as("key"),
         call_udf("encode_approved", struct(df.columns.map(col).toIndexedSeq: _*),
           lit(schemaId)).as("value"))

@@ -1,8 +1,14 @@
 package graft
 
-import graft.pipeline.{TransactionAvro, TransactionPipeline}
-import graft.pipeline.TransactionPipeline.Transaction
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import graft.pipeline.{AvroExpressions, DecodeTransaction, TransactionAvro, TransactionPipeline}
+import graft.pipeline.TransactionPipeline.{ApprovedTransaction, Transaction}
+import org.apache.spark.sql.{DataFrame, GraftSqlShim}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
+import org.apache.spark.sql.functions.{call_function, col, lit, struct}
+import org.apache.spark.sql.types.BinaryType
 
 /** Reference-pipeline replay (SURVEY.md §2.3 Q29): the canonical 5-row
   * fixture (FIXTURES.md §A.3, from BaseTransactionTest.java:145-156) must
@@ -29,6 +35,50 @@ class PipelineSpec extends SparkSpecBase {
 
   private def expected = Map(
     "t1" -> 100.0, "t2" -> 220.0, "t3" -> 195.0, "t5" -> 275.0)
+
+  /** `txs` framed into exactly the kafka batch relation's row shape. An
+    * RDD, not a local Seq, so the optimizer cannot fold the plan away.
+    */
+  private def kafkaShaped(txs: Seq[Transaction]): DataFrame = {
+    import spark.implicits._
+    spark.sparkContext.parallelize(txs.zipWithIndex.map { case (t, i) =>
+      (t.id.getBytes("UTF-8"), TransactionAvro.encodeTransaction(t),
+        "transactions", 0, i.toLong,
+        new java.sql.Timestamp(1700000000000L + i), 0)
+    }).toDF("key", "value", "topic", "partition", "offset",
+      "timestamp", "timestampType")
+  }
+
+  /** v0 writer: no description/category/metadata fields. */
+  private lazy val writerV0 = {
+    import org.apache.avro.SchemaBuilder
+    SchemaBuilder.record("Transaction").namespace("graft.avro")
+      .fields()
+      .requiredString("id").requiredDouble("amount").requiredString("currency")
+      .name("timestamp").`type`(org.apache.avro.LogicalTypes.timestampMillis()
+        .addToSchema(org.apache.avro.Schema.create(org.apache.avro.Schema.Type.LONG)))
+      .noDefault()
+      .requiredString("merchant").requiredString("status").requiredString("userId")
+      .endRecord()
+  }
+
+  /** A v0-writer frame under `schemaId`, and what the current reader makes of it. */
+  private def v0Frame(schemaId: Int): Array[Byte] = {
+    import org.apache.avro.generic.{GenericData, GenericDatumWriter}
+    import org.apache.avro.io.EncoderFactory
+    val rec = new GenericData.Record(writerV0)
+    rec.put("id", "t1"); rec.put("amount", 5.0); rec.put("currency", "EUR")
+    rec.put("timestamp", 1700000000000L); rec.put("merchant", "m")
+    rec.put("status", "APPROVED"); rec.put("userId", "u")
+    val out = new java.io.ByteArrayOutputStream()
+    val enc = EncoderFactory.get().binaryEncoder(out, null)
+    new GenericDatumWriter[org.apache.avro.generic.GenericRecord](writerV0)
+      .write(rec, enc)
+    enc.flush()
+    TransactionAvro.frame(schemaId, out.toByteArray)
+  }
+  private val v0Decoded = Transaction("t1", 5.0, "EUR",
+    new java.sql.Timestamp(1700000000000L), None, "m", None, "APPROVED", "u", None)
 
   test("batch transform reproduces the reference fixture contract") {
     import spark.implicits._
@@ -62,7 +112,7 @@ class PipelineSpec extends SparkSpecBase {
   test("streaming wire replay: framed Avro in → decode → transform → framed Avro out") {
     import spark.implicits._
     implicit val sql = spark.sqlContext
-    TransactionAvro.registerUdfs(spark)
+    AvroExpressions.register(spark)
     // simulate the Kafka value column: Confluent-framed Avro bytes
     val src = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Array[Byte]]
     src.addData(fixture.map(t => TransactionAvro.encodeTransaction(t)): _*)
@@ -138,15 +188,8 @@ class PipelineSpec extends SparkSpecBase {
     // this env, so the fixture is framed into exactly the kafka batch
     // relation's row shape and driven through the shared decode stage
     // fromKafkaBounded binds to `spark.read.format("kafka")`.
-    import spark.implicits._
-    val kafkaShaped = fixture.zipWithIndex.map { case (t, i) =>
-      (t.id.getBytes("UTF-8"), TransactionAvro.encodeTransaction(t),
-        "transactions", 0, i.toLong,
-        new java.sql.Timestamp(1700000000000L + i), 0)
-    }.toDF("key", "value", "topic", "partition", "offset",
-      "timestamp", "timestampType")
     val out = TransactionPipeline.transform(
-      TransactionPipeline.decodeValues(kafkaShaped))
+      TransactionPipeline.decodeValues(kafkaShaped(fixture)))
       .collect().map(r => r.getAs[String]("id") -> r.getAs[Double]("amountInUsd"))
       .toMap
     assert(out.keySet == expected.keySet)
@@ -154,33 +197,11 @@ class PipelineSpec extends SparkSpecBase {
   }
 
   test("schema evolution: decode an old-writer payload against the current reader") {
-    import org.apache.avro.SchemaBuilder
-    import org.apache.avro.generic.{GenericData, GenericDatumWriter}
-    import org.apache.avro.io.EncoderFactory
-    // v0 writer: no description/category/metadata fields
-    val writerV0 = SchemaBuilder.record("Transaction").namespace("graft.avro")
-      .fields()
-      .requiredString("id").requiredDouble("amount").requiredString("currency")
-      .name("timestamp").`type`(org.apache.avro.LogicalTypes.timestampMillis()
-        .addToSchema(org.apache.avro.Schema.create(org.apache.avro.Schema.Type.LONG)))
-      .noDefault()
-      .requiredString("merchant").requiredString("status").requiredString("userId")
-      .endRecord()
-    val rec = new GenericData.Record(writerV0)
-    rec.put("id", "t1"); rec.put("amount", 5.0); rec.put("currency", "EUR")
-    rec.put("timestamp", 1700000000000L); rec.put("merchant", "m")
-    rec.put("status", "APPROVED"); rec.put("userId", "u")
-    val out = new java.io.ByteArrayOutputStream()
-    val enc = EncoderFactory.get().binaryEncoder(out, null)
-    new GenericDatumWriter[org.apache.avro.generic.GenericRecord](writerV0)
-      .write(rec, enc)
-    enc.flush()
     // register v0 under a fresh id: the frame's id resolves the old
     // writer, and the current schema reads it
     val resolver = TransactionAvro.MapSchemaResolver(
       Map(3 -> writerV0, 1 -> TransactionAvro.transactionSchema))
-    val t = TransactionAvro.decodeTransaction(
-      TransactionAvro.frame(3, out.toByteArray), resolver)
+    val t = TransactionAvro.decodeTransaction(v0Frame(3), resolver)
     assert(t.id == "t1" && t.amount == 5.0 && t.currency == "EUR")
     assert(t.timestamp.getTime == 1700000000000L && t.merchant == "m" &&
       t.status == "APPROVED" && t.userId == "u")
@@ -232,6 +253,115 @@ class PipelineSpec extends SparkSpecBase {
     // Option[_] fields are the declared-nullable ones
     assert(nullable("description") && nullable("category") && nullable("metadata"))
     assert(!nullable("amount")) // primitives stay non-null
+    // the native decoder yields exactly the encoder's schema
+    val kafka = kafkaShaped(fixture)
+    assert(TransactionPipeline.decodeValues(kafka).schema == schema)
+    assert(TransactionPipeline.decodeValuesPermissive(kafka).columns.toSeq ==
+      Seq("t", "frame", "decode_error"))
+  }
+
+  test("the optimized plan decodes each frame once, in batch and in streaming") {
+    import spark.implicits._
+    implicit val sql = spark.sqlContext
+    def decodes(plan: LogicalPlan) = "decode_transaction\\(".r.findAllIn(plan.toString).length
+    val batch = TransactionPipeline.transform(
+      TransactionPipeline.decodeValues(kafkaShaped(fixture))).queryExecution.optimizedPlan
+    assert(decodes(batch) == 1, batch)
+    val src = MemoryStream[Array[Byte]]
+    src.addData(fixture.map(t => TransactionAvro.encodeTransaction(t)): _*)
+    val q = TransactionPipeline.transform(TransactionPipeline.decodeValues(src.toDF()))
+      .writeStream.format("memory").queryName("decode_once").outputMode("append").start()
+    try {
+      q.processAllAvailable()
+      val plan = q.asInstanceOf[StreamingQueryWrapper].streamingQuery
+        .lastExecution.optimizedPlan
+      assert(decodes(plan) == 1, plan)
+      assert(spark.table("decode_once").count() == 4)
+    } finally q.stop()
+  }
+
+  test("native decode and encode equal the scalar reference over many rows per partition") {
+    import spark.implicits._
+    val n = 3000
+    val txs = (0 until n).map { i =>
+      Transaction(s"tx-$i-é日本", i * 0.37 - 500, Seq("USD", "EUR", "GBP", "JPY")(i % 4),
+        new java.sql.Timestamp((i - n / 2) * 86400123L),
+        if (i % 2 == 0) None else Some("déjà ✓ " * (i % 5)),
+        s"merchant-$i", if (i % 3 == 0) None else Some(s"catégorie-${i % 7}"),
+        if (i % 5 == 0) "CANCELLED" else "APPROVED", s"üser-$i",
+        i % 3 match {
+          case 0 => None
+          case 1 => Some(Map.empty[String, String])
+          case _ => Some((0 to i % 4).map(k => s"k$k-ß" -> s"v$i-€").toMap)
+        })
+    }
+    // two partitions of 1500 rows: every reused buffer is overwritten many times
+    val frames = txs.map(t => TransactionAvro.encodeTransaction(t))
+    val decoded = TransactionPipeline.decodeValues(
+      spark.sparkContext.parallelize(frames, 2).toDF("value")).as[Transaction].collect()
+    assert(decoded.length == n)
+    frames.zip(decoded).foreach { case (f, got) =>
+      assert(got == TransactionAvro.decodeTransaction(f))
+    }
+    // rows held past the next frame's decode: no value aliases the reused record
+    val decoder = DecodeTransaction(Literal(null, BinaryType), permissive = false)
+    decoder.initialize(0)
+    val toTxn = ExpressionEncoder[Transaction]().resolveAndBind().createDeserializer()
+    frames.map(decoder.decode).zip(frames).foreach { case (row, f) =>
+      assert(toTxn(row) == TransactionAvro.decodeTransaction(f))
+    }
+
+    val approved = txs.zipWithIndex.map { case (t, i) =>
+      // pre-epoch with sub-millisecond micros: the encoder must floor
+      val processed = new java.sql.Timestamp(-1001L - i)
+      processed.setNanos(processed.getNanos + 123000)
+      ApprovedTransaction(t.id, t.amount, t.currency, t.timestamp, t.merchant,
+        t.userId, t.amount * 1.1, if (i % 2 == 0) processed else t.timestamp)
+    }
+    AvroExpressions.register(spark)
+    val df = spark.sparkContext.parallelize(approved, 2).toDF()
+    val encoded = df.select(call_function("encode_approved",
+        struct(df.columns.toIndexedSeq.map(col): _*), lit(TransactionAvro.ApprovedSchemaId)))
+      .as[Array[Byte]].collect()
+    assert(encoded.length == n)
+    approved.zip(encoded).foreach { case (a, got) =>
+      assert(got.sameElements(TransactionAvro.encodeApproved(a)), a)
+    }
+  }
+
+  test("one partition of poison and evolved frames: good rows exact, dead letters keep frame and error") {
+    import spark.implicits._
+    val resolver = TransactionAvro.MapSchemaResolver(
+      Map(1 -> TransactionAvro.transactionSchema, 3 -> writerV0))
+    val good = fixture.map(t => TransactionAvro.encodeTransaction(t))
+    val frames = Seq(good(0), good(0).dropRight(10), Array[Byte](1, 2, 3, 4, 5, 6),
+      TransactionAvro.encodeTransaction(fixture(2), schemaId = 42), v0Frame(3), null, good(1))
+    def oneSplit(fs: Seq[Array[Byte]]) = spark.sparkContext.parallelize(fs, 1).toDF("value")
+    // the public decode always uses DefaultResolver; the v0 id needs its own
+    val safe = GraftSqlShim.column(
+      DecodeTransaction(GraftSqlShim.expression(col("value")), permissive = true, resolver))
+    val rows = oneSplit(frames).select(safe.as("r"), col("value"))
+      .select(col("r.t"), col("value"), col("r.error"))
+      .as[(Option[Transaction], Array[Byte], String)].collect()
+    // decoder state (record, buffers, reader cache) never leaks past a failed frame
+    assert(rows.map(_._1).toSeq == Seq(Some(fixture(0)), None, None, None,
+      Some(v0Decoded), None, Some(fixture(1))))
+    val errors = rows.map(_._3)
+    assert(Seq(0, 4, 6).map(errors(_)) == Seq(null, null, null))
+    assert(errors(1) != null)
+    assert(errors(2).contains("not Confluent-framed"), errors(2))
+    assert(errors(3).contains("unknown schema id 42"), errors(3))
+    assert(errors(5).contains("null frame"), errors(5))
+    frames.zip(rows.map(_._2)).foreach { case (f, kept) =>
+      if (f == null) assert(kept == null) else assert(f.sameElements(kept))
+    }
+    // strict mode names the null frame instead of a bare NPE
+    val e = intercept[Exception] {
+      TransactionPipeline.decodeValues(oneSplit(Seq(good(0), null))).collect()
+    }
+    val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(x => String.valueOf(x.getMessage)).toSeq
+    assert(messages.exists(_.contains("null frame")), messages.mkString(" | "))
   }
 
   test("avro schemas declare millisecond timestamps (parity with TIMESTAMP(3))") {
